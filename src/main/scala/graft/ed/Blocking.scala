@@ -3,7 +3,7 @@ package graft.ed
 import graft.core._
 import graft.dicts.Dicts
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -46,7 +46,7 @@ object Blocking {
     * `maxBlockSize` per key by sample_id rank.
     */
   def keyedCapped(samples: Dataset[LinkingSample], dicts: Broadcast[Dicts],
-      idName: String, maxBlockSize: Int): org.apache.spark.sql.DataFrame = {
+      idName: String, maxBlockSize: Int): DataFrame = {
     val spark = samples.sparkSession
     import spark.implicits._
     val keyed = samples
@@ -74,39 +74,36 @@ object Blocking {
     keys.result().distinct
   }
 
+  /** Deduplicated-sample-count cutoff below which Pipeline.run's
+    * small-vocabulary route runs the whole blocked pair join on the driver
+    * ([[edgesLocal]]; same rationale as
+    * [[ConnectedComponents.DriverEdgeCutoff]]): a tiny sample set costs
+    * more in the stage barriers of the distributed key/cap/join/dedup/
+    * score chain than in memory, and the worst case is bounded — ≤ cutoff
+    * samples × ≤ maxBlockSize block members ⇒ ≤ cutoff²/2 scored pairs.
+    */
+  val DriverSampleCutoff = 256L
+
   /** Candidate pairs (src < dst) within blocks; scored edges ≤ threshold.
     *
     * Shuffle profile: one shuffle to group by block key (hash partitioned),
     * pair generation inside each block (no cross-block work), then a
     * distinct on (src,dst) — both shuffles are on compact (long,long) rows.
-    * The candidate join carries ONLY sample ids; features are computed after
-    * a broadcast-friendly re-join with the (deduplicated, small) sample set.
+    * The candidates stay ids-only through scoring: [[scoreCandidates]]
+    * looks both ends up in a broadcast of the samples' scoring fields, so
+    * no sample payload is joined or shuffled per pair.
+    *
+    * The sample set is assumed vocabulary-sized — one row per distinct
+    * surface, as the reference also holds its sample set in memory — and
+    * its `sample_id`s unique: its scoring fields are collected to the
+    * driver when this is called.
     */
-  /** Deduplicated-sample-count cutoff below which the whole blocked pair
-    * join runs on the driver (same rationale as
-    * [[ConnectedComponents.DriverEdgeCutoff]]): a tiny sample set costs
-    * more in the ~5 stage barriers of the distributed key/cap/join/dedup/
-    * score chain than in memory, and the worst case is bounded — ≤ cutoff
-    * samples × ≤ maxBlockSize block members ⇒ ≤ cutoff²/2 scored pairs.
-    * Callers opt in by passing the sample count they already know
-    * (Pipeline.run counts samples when materializing the cache); with no
-    * known count the distributed path is used unconditionally.
-    */
-  val DriverSampleCutoff = 256L
-
   def edges(
       samples: Dataset[LinkingSample],
       dicts: Broadcast[Dicts],
       threshold: Double = PairScorer.Threshold,
       maxBlockSize: Int = 1000,
-      scoredCounter: Option[org.apache.spark.util.LongAccumulator] = None,
-      knownSampleCount: Option[Long] = None): Dataset[Edge] = {
-    val spark = samples.sparkSession
-    import spark.implicits._
-
-    if (knownSampleCount.exists(_ <= DriverSampleCutoff))
-      return edgesOnDriver(samples, dicts, threshold, maxBlockSize, scoredCounter)
-
+      scoredCounter: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[Edge] = {
     // deterministic per-block cap (O3-style): rank by sample_id
     val capped = keyedCapped(samples, dicts, "id", maxBlockSize)
 
@@ -116,53 +113,89 @@ object Blocking {
     val candidates = a.join(b, col("a.key") === col("b.key") && col("a.id") < col("b.id"))
       .select(col("a.id").as("src"), col("b.id").as("dst"))
       .distinct()
-
-    // re-attach sample payloads and score. The deduplicated sample set is
-    // orders of magnitude smaller than the mention table; joining twice on
-    // the long id keeps the shuffled width minimal.
-    val samplesDF = samples.toDF()
-    val withPayload = candidates
-      .join(samplesDF.as("sa"), col("src") === col("sa.sample_id"))
-      .join(samplesDF.as("sb"), col("dst") === col("sb.sample_id"))
-      .select(
-        struct(col("sa.*")).as("a"),
-        struct(col("sb.*")).as("b"))
-
-    val enc = org.apache.spark.sql.Encoders.product[(LinkingSample, LinkingSample)]
-    withPayload.as[(LinkingSample, LinkingSample)](enc)
-      .mapPartitions { it =>
-        val d = dicts.value
-        it.flatMap { case (sa, sb) =>
-          scoredCounter.foreach(_.add(1)) // evidence: pair scoring runs ONCE
-          val dist = PairScorer.distance(sa, sb, d)
-          if (dist <= threshold) Iterator(Edge(sa.sample_id, sb.sample_id, dist)) else Iterator.empty
-        }
-      }
+    val fields = scoringFields(samples)
+    scoreCandidates(candidates, fields, fields, dicts, threshold, scoredCounter)
   }
 
-  /** Driver twin of the distributed path for sample sets below
-    * [[DriverSampleCutoff]]: same keys ([[keysFor]]), same deterministic
-    * per-key cap (sort by sample_id, take maxBlockSize), same i<j pair
-    * space, same (src,dst) dedup BEFORE scoring (the scored-once
-    * contract — the accumulator counts identically), same scorer and
-    * threshold. Edge-set equality with the distributed path is
-    * property-pinned in Round6Spec.
+  /** Scoring fields (`string`, `norm`, `relations`) of a sample set —
+    * everything [[PairScorer.prepare]] reads of a sample — as columns
+    * sorted by `sample_id`, so a partition looks an id up by binary search
+    * and memoizes its prepared form in a slot of the same index.
     */
-  private def edgesOnDriver(
-      samples: Dataset[LinkingSample],
-      dicts: Broadcast[Dicts],
-      threshold: Double,
-      maxBlockSize: Int,
-      scoredCounter: Option[org.apache.spark.util.LongAccumulator]): Dataset[Edge] = {
+  private[ed] final class ScoringFields(
+      ids: Array[Long],
+      strings: Array[String],
+      norms: Array[String],
+      relations: Array[Seq[RelInfo]]) extends Serializable {
+
+    /** Id → prepared sample, preparing each sample at most once. */
+    def memo(d: Dicts): Long => PairScorer.Prepared = {
+      val prepared = new Array[PairScorer.Prepared](ids.length)
+      id => {
+        val i = java.util.Arrays.binarySearch(ids, id)
+        if (prepared(i) == null) prepared(i) = PairScorer.prepare(strings(i), norms(i), relations(i), d)
+        prepared(i)
+      }
+    }
+  }
+
+  /** Collects and broadcasts the [[ScoringFields]] of `samples` for
+    * [[scoreCandidates]]. Fails fast when an id repeats: the lookup could
+    * then keep only one of its rows.
+    */
+  private[ed] def scoringFields(samples: Dataset[LinkingSample]): Broadcast[ScoringFields] = {
     val spark = samples.sparkSession
     import spark.implicits._
-    spark.createDataset(
-      edgesLocal(samples.collect(), dicts.value, threshold, maxBlockSize, scoredCounter))
+    val rows = samples.select("sample_id", "string", "norm", "relations")
+      .as[(Long, String, String, Seq[RelInfo])].collect().sortBy(_._1)
+    val repeats = rows.iterator.sliding(2).count(w => w.length == 2 && w(0)._1 == w(1)._1)
+    require(repeats == 0, s"ED scoring expects one sample per sample_id; $repeats ids repeat")
+    spark.sparkContext.broadcast(new ScoringFields(
+      rows.map(_._1), rows.map(_._2), rows.map(_._3), rows.map(_._4)))
   }
 
-  /** The driver-side pair-join kernel shared by [[edges]]' fast path and
-    * Pipeline.run's small-vocabulary route (which already holds the
-    * collected samples and so skips even the collect job).
+  /** The ONE distributed scoring kernel, shared with
+    * [[EdEval.edgesBetween]]: scores ids-only (src, dst) candidates,
+    * looking `src` up in `left` and `dst` in `right` (the same broadcast
+    * for an in-set join; separate ones for a cross-set join, whose sets
+    * may carry the same id with different contexts). Each partition
+    * prepares a sample once ([[PairScorer.prepare]]) and keeps it in a
+    * memo; [[PairScorer.cannotLink]] rejects a pair on lengths alone
+    * before the string kernels run. `scoredCounter` counts every
+    * candidate, filtered ones included.
+    */
+  private[ed] def scoreCandidates(
+      candidates: DataFrame,
+      left: Broadcast[ScoringFields],
+      right: Broadcast[ScoringFields],
+      dicts: Broadcast[Dicts],
+      threshold: Double,
+      scoredCounter: Option[org.apache.spark.util.LongAccumulator]): Dataset[Edge] = {
+    val spark = candidates.sparkSession
+    import spark.implicits._
+    val sameSides = left.id == right.id
+    candidates.select(col("src"), col("dst")).as[(Long, Long)].mapPartitions { it =>
+      val lhs = left.value.memo(dicts.value)
+      val rhs = if (sameSides) lhs else right.value.memo(dicts.value)
+      it.flatMap { case (src, dst) =>
+        scoredCounter.foreach(_.add(1)) // evidence: pair scoring runs ONCE
+        val (pa, pb) = (lhs(src), rhs(dst))
+        if (PairScorer.cannotLink(pa, pb, threshold)) Iterator.empty
+        else {
+          val dist = PairScorer.distance(pa, pb)
+          if (dist <= threshold) Iterator(Edge(src, dst, dist)) else Iterator.empty
+        }
+      }
+    }
+  }
+
+  /** The driver-side pair join of Pipeline.run's small-vocabulary route
+    * (which already holds the collected samples): same keys ([[keysFor]]),
+    * same deterministic per-key cap (sort by sample_id, take maxBlockSize),
+    * same i<j pair space, same (src,dst) dedup BEFORE scoring (the
+    * scored-once contract — the accumulator counts identically), same
+    * scorer, filter and threshold as [[edges]]. Edge-set equality with
+    * [[edges]] is property-pinned in src/test.
     */
   private[graft] def edgesLocal(
       local: Array[LinkingSample],
@@ -170,7 +203,7 @@ object Blocking {
       threshold: Double,
       maxBlockSize: Int,
       scoredCounter: Option[org.apache.spark.util.LongAccumulator]): Vector[Edge] = {
-    val byId = local.map(s => s.sample_id -> s).toMap
+    val byId = local.map(s => s.sample_id -> PairScorer.prepare(s, d)).toMap
     val blocks = scala.collection.mutable.LinkedHashMap.empty[String, scala.collection.mutable.ArrayBuffer[Long]]
     local.foreach { s =>
       keysFor(s, d).foreach(k =>
@@ -187,8 +220,11 @@ object Blocking {
           val (src, dst) = (capped(i), capped(j))
           if (src < dst && seen.add((src, dst))) {
             scoredCounter.foreach(_.add(1))
-            val dist = PairScorer.distance(byId(src), byId(dst), d)
-            if (dist <= threshold) out += Edge(src, dst, dist)
+            val (pa, pb) = (byId(src), byId(dst))
+            if (!PairScorer.cannotLink(pa, pb, threshold)) {
+              val dist = PairScorer.distance(pa, pb)
+              if (dist <= threshold) out += Edge(src, dst, dist)
+            }
           }
           j += 1
         }

@@ -134,7 +134,9 @@ object EdEval {
 
   /** J8 — blocked edges BETWEEN two sample sets (e.g. new crawl vs existing
     * canonical entities): same blocking keys, pairs restricted to cross-set,
-    * same scorer and threshold.
+    * same scorer and threshold, through the same ids-only scoring kernel
+    * as [[Blocking.edges]] (each set's scoring fields in its own broadcast,
+    * so an id present in both sets keeps each side's context).
     *
     * Skew guard (same `maxBlockSize` discipline as [[Blocking.edges]],
     * applied to BOTH sides): this is the streaming KG's per-batch hot path
@@ -154,8 +156,6 @@ object EdEval {
       maxBlockSize: Int = 1000,
       scoredCounter: Option[org.apache.spark.util.LongAccumulator] = None,
       excludeSelf: Boolean = false): Dataset[Edge] = {
-    val spark = newSamples.sparkSession
-    import spark.implicits._
     val base = Blocking.keyedCapped(newSamples, dicts, "src", maxBlockSize)
       .join(Blocking.keyedCapped(oldSamples, dicts, "dst", maxBlockSize), "key")
     // DEFAULT keeps (x, x) pairs: for the J8 new-vs-old compare the same
@@ -167,19 +167,7 @@ object EdEval {
     // are disjoint either way (round-5 review).
     val candidates = (if (excludeSelf) base.filter(col("src") =!= col("dst")) else base)
       .select(col("src"), col("dst")).distinct()
-    val withPayload = candidates
-      .join(newSamples.toDF().as("sa"), col("src") === col("sa.sample_id"))
-      .join(oldSamples.toDF().as("sb"), col("dst") === col("sb.sample_id"))
-      .select(struct(col("sa.*")).as("a"), struct(col("sb.*")).as("b"))
-    val enc = org.apache.spark.sql.Encoders.product[(LinkingSample, LinkingSample)]
-    withPayload.as[(LinkingSample, LinkingSample)](enc)
-      .mapPartitions { it =>
-        val d = dicts.value
-        it.flatMap { case (sa, sb) =>
-          scoredCounter.foreach(_.add(1)) // scored-once evidence, as in Blocking.edges
-          val dist = PairScorer.distance(sa, sb, d)
-          if (dist <= threshold) Iterator(Edge(sa.sample_id, sb.sample_id, dist)) else Iterator.empty
-        }
-      }
+    Blocking.scoreCandidates(candidates, Blocking.scoringFields(newSamples),
+      Blocking.scoringFields(oldSamples), dicts, threshold, scoredCounter)
   }
 }

@@ -228,7 +228,8 @@ object Hac {
         val (inBlock, overflow) = all.splitAt(maxBlock)
         val d = dicts.value
         val ids = inBlock.map(_.sample_id)
-        val distFn = (i: Int, j: Int) => PairScorer.distance(inBlock(i), inBlock(j), d)
+        val prepared = inBlock.map(PairScorer.prepare(_, d))
+        val distFn = (i: Int, j: Int) => PairScorer.distance(prepared(i), prepared(j))
         val assigned = nIntervals match {
           case Some(k) => intervalCluster(ids, distFn, linkage, threshold, k)
           case None    => cluster(ids, distFn, linkage, threshold)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Large-scale training-data deduplication operators over a `documents`
   * table (doc_id, text). Five families, each shaped for 100 TB inputs:
@@ -339,17 +340,26 @@ object Dedup {
     * the pair distinct. Pair set identical to the window+join twin
     * ([[lshCandidatesJoin]], property-pinned in Round6Spec).
     *
-    * Contract: `doc_id` must be castable to long — the standing contract of
-    * the whole minhash/simhash family ([[minhashBandSignatures]],
-    * [[simhashSignatures]] and [[shingleSets]] all cast it); output
-    * src/dst are bigint.
+    * Contract: `doc_id` must be non-null and castable to long — the
+    * standing contract of the whole minhash/simhash family
+    * ([[minhashBandSignatures]], [[simhashSignatures]] and [[shingleSets]]
+    * all cast it); output src/dst are bigint. A column type that cannot be
+    * cast fails before any job; a null or unparsable value fails the job
+    * with the contract message (raised inside the projection, so no extra
+    * pass checks it).
     */
   def lshCandidates(bandsDf: DataFrame, maxBucket: Int = 1000): DataFrame = {
     val spark = bandsDf.sparkSession
     import spark.implicits._
+    val contract = "Dedup.lshCandidates: doc_id must be non-null and castable to long"
+    val idType = bandsDf.schema("doc_id").dataType
+    require(org.apache.spark.sql.catalyst.expressions.Cast.canTryCast(idType, LongType),
+      s"$contract; got column type ${idType.simpleString}")
+    val docId = coalesce(col("doc_id").try_cast(LongType), raise_error(
+      concat(lit(s"$contract; got "), coalesce(col("doc_id").cast("string"), lit("NULL")))))
     val agg = new BoundedMinIds(maxBucket).toColumn
     bandsDf
-      .select(col("band").cast("long"), col("band_hash").cast("long"), col("doc_id").cast("long"))
+      .select(col("band").cast("long"), col("band_hash").cast("long"), docId)
       .as[(Long, Long, Long)]
       .groupByKey(r => (r._1, r._2))
       .mapValues(_._3)

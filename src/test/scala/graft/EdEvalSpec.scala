@@ -1,8 +1,8 @@
 package graft
 
-import graft.core.{Edge, LinkingSample, Normalize}
+import graft.core.{Edge, LinkingSample, Normalize, RelInfo}
 import graft.dicts.Dicts
-import graft.ed.{Blocking, ConnectedComponents, EdEval}
+import graft.ed.{Blocking, ConnectedComponents, EdEval, PairScorer}
 import org.scalatest.funsuite.AnyFunSuite
 
 class EdEvalSpec extends AnyFunSuite {
@@ -65,6 +65,21 @@ class EdEvalSpec extends AnyFunSuite {
     val e = EdEval.edgesBetween(newS, oldS, bc).collect()
     assert(e.exists(x => x.src == 10L && x.dst == 1L))
     assert(!e.exists(x => x.src == 11L))
+  }
+
+  test("J8 edgesBetween scores a shared id with each set's own context") {
+    import spark.implicits._
+    // id 1 is in both sets with different URL contexts; only the old set's
+    // context shares a URL with new sample 2, which is worth the 0.02 bonus
+    val url = (u: String) => Seq(RelInfo("URL_of", u))
+    val old1 = sample(1, "Statistica").copy(relations = url("https://a.org"))
+    val new1 = old1.copy(relations = url("https://b.org"))
+    val new2 = sample(2, "Statistika").copy(relations = url("https://a.org"))
+    val e = EdEval.edgesBetween(spark.createDataset(Seq(new1, new2)), spark.createDataset(Seq(old1)),
+      Dicts.broadcast(spark, Dicts.fixture), threshold = 1.0).collect()
+    val want = PairScorer.distance(new2, old1, Dicts.fixture)
+    assert(want < PairScorer.distance(new2, new1, Dicts.fixture))
+    assert(e.toSet == Set(Edge(1L, 1L, 0.0), Edge(2L, 1L, want)), e.mkString(", "))
   }
 
   test("J8 cross-set join caps hot blocks on BOTH sides (skew guard)") {

@@ -64,6 +64,27 @@ class DedupSpec extends AnyFunSuite {
     assert(dupes.contains((0L, 1L)))
   }
 
+  test("lshCandidates fails fast on a null or non-castable doc_id, naming the contract") {
+    val contract = "doc_id must be non-null and castable to long"
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val good = Seq((0, 7L, "1"), (0, 7L, "2"))
+    for (bad <- Seq("x1", null)) {
+      val bands = (good :+ ((0, 7L, bad))).toDF("band", "band_hash", "doc_id")
+      val e = intercept[Exception](Dedup.lshCandidates(bands).collect())
+      assert(messages(e).contains(contract), messages(e))
+      assert(messages(e).contains(if (bad == null) "got NULL" else s"got $bad"), messages(e))
+    }
+    // a column type no cast reaches fails before any job runs
+    val arrays = Seq((0, 7L, Seq(1L))).toDF("band", "band_hash", "doc_id")
+    val e = intercept[IllegalArgumentException](Dedup.lshCandidates(arrays))
+    assert(e.getMessage.contains(contract), e.getMessage)
+    // castable strings still pair
+    val ok = Dedup.lshCandidates(good.toDF("band", "band_hash", "doc_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(ok.toSeq == Seq((1L, 2L)))
+  }
+
   test("ngram jaccard within blocks") {
     val r = Dedup.ngramJaccardDupes(docs, k = 3, threshold = 0.5)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))

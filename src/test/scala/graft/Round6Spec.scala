@@ -129,9 +129,9 @@ class Round6Spec extends AnyFunSuite {
     assert(actual == expected)
   }
 
-  // --- Blocking driver fast path ≡ distributed blocked pair join -----------
+  // --- Blocking driver route ≡ distributed blocked pair join --------------
 
-  test("Blocking.edges driver fast path ≡ distributed path (edge-set equality)") {
+  test("Blocking.edgesLocal driver route ≡ distributed path (edge-set equality)") {
     import spark.implicits._
     val bc = graft.dicts.Dicts.broadcast(spark, graft.dicts.Dicts.fixture)
     val surfaces = Seq("Stata", "STATA", "stata 13", "SPSS",
@@ -155,9 +155,8 @@ class Round6Spec extends AnyFunSuite {
     val drvCnt = spark.sparkContext.longAccumulator("drv")
     val distributed = graft.ed.Blocking.edges(ds, bc, threshold = 1.0,
       scoredCounter = Some(distCnt)).collect().toSet
-    val driver = graft.ed.Blocking.edges(ds, bc, threshold = 1.0,
-      scoredCounter = Some(drvCnt), knownSampleCount = Some(samples.length.toLong))
-      .collect().toSet
+    val driver = graft.ed.Blocking.edgesLocal(samples.toArray, bc.value, threshold = 1.0,
+      maxBlockSize = 1000, scoredCounter = Some(drvCnt)).toSet
     assert(driver == distributed)
     assert(drvCnt.value == distCnt.value, "scored-once pair counts must match")
   }
