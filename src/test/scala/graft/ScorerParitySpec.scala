@@ -103,20 +103,21 @@ class ScorerParitySpec extends AnyFunSuite {
     assert(rejected > 0, "the generated pairs must exercise the filter")
   }
 
-  test("distributed Blocking.edges ≡ Blocking.edgesLocal over >256 samples with a block over the cap") {
-    import spark.implicits._
+  /** >256 samples (past [[Blocking.DriverSampleCutoff]]): ~90 surfaces
+    * share the p:open key (over [[overCap]]); the rest are planted variants
+    * of random words, so pairs both link and filter.
+    */
+  private val overCap = 60
+  private lazy val overCapSamples: Array[LinkingSample] = {
     val rnd = new scala.util.Random(17)
-    val cap = 60
     def word(n: Int) = Iterator.continually(rnd.nextPrintableChar()).filter(_.isLetter).take(n).mkString
-    // ~90 surfaces share the p:open key (over the cap of 60); the rest are
-    // planted variants of random words, so both sides link and filter
     val surfaces = ((0 until 90).map(i => s"Open${word(1 + i % 9)}") ++
       (0 until 110).flatMap { _ =>
         val w = word(3 + rnd.nextInt(8))
         Seq(w, w.toUpperCase(java.util.Locale.ROOT) + " 2")
       } ++ Seq("", "ГИС", "GIS", "数据分析", "Zürich-Toolkit", "ZTK", "Stata", "STATA")).distinct
     val ids = rnd.shuffle(surfaces.indices.map(_.toLong * 7919L).toVector)
-    val samples = surfaces.zip(ids).map { case (m, id) =>
+    surfaces.zip(ids).map { case (m, id) =>
       val rels =
         if (id % 3 == 0) Seq(RelInfo("URL_of", "https://x.org"), RelInfo("Abbreviation_of", m.take(3)))
         else if (id % 5 == 0) Seq(RelInfo("Developer_of", "Dev"), RelInfo("Version_of", "2"))
@@ -124,6 +125,12 @@ class ScorerParitySpec extends AnyFunSuite {
       LinkingSample(id, "c", 0, 0, m, Normalize.removeSpaces(m), Normalize.normalize(m),
         "Application_Usage", rels)
     }.toArray
+  }
+
+  test("distributed Blocking.edges ≡ Blocking.edgesLocal over >256 samples with a block over the cap") {
+    import spark.implicits._
+    val cap = overCap
+    val samples = overCapSamples
     assert(samples.length > Blocking.DriverSampleCutoff)
     val blocks = samples.toSeq.flatMap(s => Blocking.keysFor(s, dicts).map(_ -> s.sample_id))
       .groupBy(_._1).values.map(_.map(_._2).sorted)
@@ -146,6 +153,16 @@ class ScorerParitySpec extends AnyFunSuite {
       // every candidate pair counts as scored, the length-filtered ones too
       assert(distCnt.value == candidates.size.toLong, s"t=$t")
     }
+  }
+
+  test("Blocking.edges caps blocks map-side: no Window in the executed plan") {
+    import spark.implicits._
+    val edges = Blocking.edges(spark.createDataset(overCapSamples.toSeq), Dicts.broadcast(spark, dicts),
+      PairScorer.Threshold, overCap)
+    assert(edges.collect().nonEmpty)
+    val plan = edges.queryExecution.executedPlan.toString
+    assert(plan.contains("isFinalPlan=true") && plan.contains("ObjectHashAggregate"), plan)
+    assert(!plan.contains("Window"), plan)
   }
 
   test("Blocking.edges fails fast on repeated sample ids") {
